@@ -9,10 +9,11 @@ Within one query run those caches pay for themselves; across a long-lived
 driver session running MANY queries the blocks would otherwise accumulate
 executor memory.
 
-Hosts that run many queries per session (bench.py, tools/stress.py, a
-driver round) call :func:`release_caches` between queries. It drops the
-materialized blocks but leaves Catalyst's cache INTENT registered, so a
-handle that is reused later (e.g. payloads._BLOB_CACHE) transparently
+Hosts that run many queries per session (tools/stress.py, a driver loop)
+call :func:`release_caches` between queries. It drops the materialized
+blocks — ``localCheckpoint`` ones included, which ``clearCache()`` leaves
+behind — but leaves Catalyst's cache INTENT registered, so a plan that is
+built again later (e.g. payloads.build_kpl_blobs) transparently
 re-materializes on its next action instead of silently losing its
 optimizer boundary.
 """

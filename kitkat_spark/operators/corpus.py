@@ -35,6 +35,7 @@ from kitkat_spark.operators.dedup import (
     pairwise_set_counts,
 )
 from kitkat_spark.sources import load_table
+from kitkat_spark.sources.writer import scratch_dir
 
 CHUNK_TOKENS = 32
 CHUNK_STRIDE = 24
@@ -92,72 +93,31 @@ def connected_components(
     return connected_components_star(e0, src="u", dst="v")
 
 
-# Materialized cluster-membership tables, one parquet dir per sf_dir
-# (tempfile.mkdtemp's random suffix keeps concurrent pytest/bench
-# processes from clobbering each other's files). Each re-materialization
-# creates a fresh dir and the superseded ones stay on disk until process
-# exit (_cleanup_members_dirs) — bounded growth: one small parquet dir per
-# q_dedup_clusters call, paid only by long sessions that re-cluster.
-# This is the production layout: clustering writes a
-# membership table ONCE; every downstream consumer (canonical selection,
-# the corpus anti-join, dup-rate reporting) reads the table instead of
-# re-deriving the pair graph + CC — at 100 TB the membership table is the
-# contract between the dedup stage and everything after it.
-_MEMBERS_PATHS: dict[str, str] = {}
+def cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cluster-membership table: connected components over the
+    exact-Jaccard pair graph, one row per non-singleton doc with its
+    cluster_id and is_canonical flag (min doc_id per cluster).
 
-
-def _compute_members(spark: SparkSession, sf_dir: str) -> DataFrame:
+    Each call computes the table, writes it to a fresh parquet dir
+    (``sources.writer.scratch_dir``) and returns a plain scan of that dir.
+    This is the production layout: clustering writes a membership table,
+    and every downstream consumer (canonical selection, the corpus
+    anti-join, dup-rate reporting) reads that table — at 100 TB it is the
+    contract between the dedup stage and everything after it. The write is
+    of the already-checkpointed CC output, so it adds only the tiny parquet
+    write, not a recompute; consumers plan a parquet scan
+    (order-deterministic for the plan-facts gate) and never re-execute the
+    pair graph."""
     pairs = jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     cc = connected_components(pairs, src="doc_a", dst="doc_b")
-    return cc.select(
+    members = cc.select(
         F.col("u").alias("doc_id"),
         F.col("label").alias("cluster_id"),
         (F.col("u") == F.col("label")).alias("is_canonical"),
     )
-
-
-_MEMBERS_DIRS_CREATED: list[str] = []
-
-
-def _cleanup_members_dirs() -> None:
-    import shutil
-
-    for d in _MEMBERS_DIRS_CREATED:
-        shutil.rmtree(d, ignore_errors=True)
-    # a mid-process call must not leave the memo pointing at deleted dirs
-    _MEMBERS_DIRS_CREATED.clear()
-    _MEMBERS_PATHS.clear()
-
-
-def _materialize_members(spark: SparkSession, sf_dir: str, members: DataFrame) -> str:
-    import atexit
-    import hashlib
-    import os
-    import tempfile
-
-    # a fresh versioned dir per materialization (never overwrite in place:
-    # a live DataFrame from a previous cluster_members() call still lists
-    # the old part files — overwriting them under it is a
-    # FileNotFoundException at its next action); all dirs are removed at
-    # process exit
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = tempfile.mkdtemp(prefix=f"kitkat_members_{key}_")
+    path = scratch_dir("kitkat_members_")
     members.write.mode("overwrite").parquet(path)
-    if not _MEMBERS_DIRS_CREATED:
-        atexit.register(_cleanup_members_dirs)
-    _MEMBERS_DIRS_CREATED.append(path)
-    _MEMBERS_PATHS[sf_dir] = path
-    return path
-
-
-def cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The membership table, from the materialized parquet — computing and
-    writing it first if this process hasn't yet. Consumers always plan a
-    plain parquet scan (order-deterministic for the plan-facts gate); only
-    the FIRST caller in a process pays the pair-graph + CC derivation."""
-    if sf_dir not in _MEMBERS_PATHS:
-        _materialize_members(spark, sf_dir, _compute_members(spark, sf_dir))
-    return spark.read.parquet(_MEMBERS_PATHS[sf_dir])
+    return spark.read.parquet(path)
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,21 +125,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph (same edges as q_ngram_jaccard), one canonical doc (min doc_id)
     per cluster. Singleton docs are not emitted — output is exactly the
     membership table a dedup pass would anti-join against the corpus
-    (keep rows where is_canonical OR doc absent).
-
-    Side effect: refreshes the materialized membership parquet (see
-    ``cluster_members``) so downstream consumers read instead of
-    re-deriving — the write is of the already-checkpointed CC output, so
-    it adds only the tiny parquet write, not a recompute. The RETURNED
-    plan is a plain scan of that parquet (not the pre-write projection):
-    the returned DataFrame and the materialized contract are the same
-    artifact, so consumers of the return value never re-execute the
-    projection and the timing boundary (compute + write inside this call)
-    cannot silently regress if the CC output ever stops being
-    checkpointed."""
-    members = _compute_members(spark, sf_dir)
-    path = _materialize_members(spark, sf_dir, members)
-    return spark.read.parquet(path)
+    (keep rows where is_canonical OR doc absent). The returned plan is a
+    scan of the materialized membership parquet (``cluster_members``)."""
+    return cluster_members(spark, sf_dir)
 
 
 def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,7 +139,7 @@ def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: reads the MATERIALIZED membership table (``cluster_members`` —
     only non-singleton docs, structurally tiny relative to the corpus;
-    written once by the clustering stage, the production contract), joins
+    the clustering stage's output, the production contract), joins
     doc lengths, then ONE window argmax per cluster and ONE aggregation
     emit (cluster_id, canonical doc, member count, chars kept/removed).
     At 100 TB both stages key on cluster_id — the post-clustering data is

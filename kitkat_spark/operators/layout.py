@@ -30,11 +30,13 @@ combinable shuffle keyed on the bucket.
 from __future__ import annotations
 
 import functools
+import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kitkat_spark.sources import load_table
+from kitkat_spark.sources.writer import scratch_dir, write_partitioned
 
 Z_BITS = 8  # bits per dimension -> 16-bit z-value
 Z_BUCKETS = 256  # contiguous curve runs ("files")
@@ -102,48 +104,14 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# partitioned-events layout memo: one date-partitioned write per
-# (process, sf_dir) via sources/writer.py, then every q_partition_prune
-# call plans a pruned scan of it (mkdtemp keeps concurrent processes
-# apart; dirs removed at interpreter exit)
-_PART_PATHS: dict[str, str] = {}
-_PART_DIRS_CREATED: list[str] = []
-
-
-def _cleanup_part_dirs() -> None:
-    import shutil
-
-    for d in _PART_DIRS_CREATED:
-        shutil.rmtree(d, ignore_errors=True)
-    _PART_DIRS_CREATED.clear()
-    _PART_PATHS.clear()
-
-
 def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table in a day-partitioned layout (written once per
-    process through sources/writer.py write_partitioned, sorted by ts
-    within each day so row-group stats prune on time too)."""
-    import atexit
-    import os
-    import tempfile
-
-    if sf_dir not in _PART_PATHS:
-        # benign check-then-set race (threads): both write identical
-        # layouts to distinct mkdtemp roots; last memo wins, both dirs are
-        # cleaned at exit (same non-guarantee as _MEMBERS_PATHS).
-        from kitkat_spark.sources.writer import write_partitioned
-
-        root = tempfile.mkdtemp(prefix="kitkat_events_by_day_")
-        if not _PART_DIRS_CREATED:
-            atexit.register(_cleanup_part_dirs)
-        _PART_DIRS_CREATED.append(root)
-        path = os.path.join(root, "t")
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "day", F.to_date("ts")
-        )
-        write_partitioned(ev, path, ["day"], sort_within=["ts"])
-        _PART_PATHS[sf_dir] = path
-    df = spark.read.parquet(_PART_PATHS[sf_dir])
+    """The events table in a day-partitioned layout, written per call to a
+    fresh scratch dir through sources/writer.py write_partitioned, sorted
+    by ts within each day so row-group stats prune on time too."""
+    path = os.path.join(scratch_dir("kitkat_events_by_day_"), "t")
+    ev = load_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
+    write_partitioned(ev, path, ["day"], sort_within=["ts"])
+    df = spark.read.parquet(path)
     # The day partition column's DATE type comes from partition-column type
     # inference (spark.sql.sources.partitionColumnTypeInference.enabled,
     # default true); a host session with it disabled would read it back as

@@ -33,21 +33,12 @@ from kitkat_spark.sources import load_table
 
 BLOB_SIZE = 5
 
-# fixture cache: blob synthesis is test scaffolding, not the operator under
-# test — build once per (session, sf_dir) and persist so repeated queries
-# measure deaggregation itself
-_BLOB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def build_kpl_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BLOB_CACHE:
-        _BLOB_CACHE[key] = _build_kpl_blobs(spark, sf_dir).persist()
-    return _BLOB_CACHE[key]
-
-
-def _build_kpl_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic KPL fixture: events grouped 5-per-blob by event_id.
+    """Deterministic KPL fixture: events grouped 5-per-blob by event_id,
+    persisted (blob synthesis is test scaffolding, not the operator under
+    test). Every build plans the same fixture, so Spark's CacheManager serves
+    repeated builds on one path from one block.
 
     Built distributed with mapInPandas over blob-id-hash-partitioned, sorted
     partitions: one Python call per Arrow batch, with the trailing
@@ -115,6 +106,7 @@ def _build_kpl_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(par, "blob_id")
         .sortWithinPartitions("blob_id")
         .mapInPandas(encode_batches, schema="blob_id long, blob binary")
+        .persist()
     )
 
 

@@ -155,9 +155,9 @@ def q_shard_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # replay fixtures for the streaming-native queries: written once per
 # (session, sf_dir, variant) — test scaffolding (production reads a real
-# source), so repeat invocations (bench's two passes) measure the streaming
-# op, not the fixture write. Caches (path, row_count): the count prices the
-# state-partition sizing below and is known for free at write time.
+# source), so repeat invocations measure the streaming op, not the fixture
+# write. Caches (path, row_count): the count prices the state-partition
+# sizing below and is known for free at write time.
 _REPLAY_CACHE: dict[tuple[str, str, str], tuple[str, int]] = {}
 
 # target rows per state-store task (see _state_partitions)
@@ -1558,8 +1558,8 @@ _FRESH_DIRS: dict[tuple[str, str, str], str] = {}
 
 def _fresh_scratch(spark: SparkSession, variant: str, sf_dir: str) -> str:
     """A NEVER-REUSED scratch base for streaming ops that must pay their
-    full pipeline on every invocation (no checkpoint carry-over — the
-    bench min-of-2 convention requires each call to run the real thing).
+    full pipeline on every invocation (no checkpoint carry-over — a timed
+    repeat must run the real thing).
     The path carries a per-call nonce so no invocation can rmtree
     another's in-flight checkpoint; the previous call's dir for the same
     key is reclaimed AFTER this call claims its own, bounding the leak to

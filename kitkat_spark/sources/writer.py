@@ -20,8 +20,33 @@ performance is decided at write time:
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# every scratch_dir handed out in this process; removed at interpreter exit
+_SCRATCH_DIRS: list[str] = []
+
+
+def _cleanup_scratch_dirs() -> None:
+    for d in _SCRATCH_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+    _SCRATCH_DIRS.clear()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh local directory for one materialized intermediate, removed at
+    process exit. Fresh per call (mkdtemp's random suffix also keeps
+    concurrent processes apart): a live DataFrame from an earlier write still
+    lists that write's part files, so a rewrite must never reuse its dir."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    if not _SCRATCH_DIRS:
+        atexit.register(_cleanup_scratch_dirs)
+    _SCRATCH_DIRS.append(path)
+    return path
 
 
 def write_partitioned(

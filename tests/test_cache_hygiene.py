@@ -5,7 +5,7 @@ call (the result DataFrame is collected by the caller). Two guarantees keep
 a long-lived session from accumulating blocks:
 
 1. ``caches.release_caches`` drops every persisted block (hosts call it
-   between queries — bench.py, tools/stress.py).
+   between queries — tools/stress.py).
 2. Every registry entry is wrapped by ``queries._cache_scoped``: invoking
    query N+1 sweeps query N's blocks, so a driver loop that never calls
    release_caches still holds at most one query's working set.
@@ -58,66 +58,71 @@ def test_back_to_back_queries_do_not_accumulate(spark):
     assert _n_cached(spark) == 0
 
 
-# ---- the session-scoped LSH signature cache (round-13 verdict #8) ----
+# ---- Spark's CacheManager is the only cache ----
 
 
-def test_sig_cache_two_sf_dirs_do_not_cross_contaminate(spark):
+def test_signature_tables_of_two_sf_dirs_differ(spark):
     """Two fixture dirs served from one session must each get their OWN
-    signature table: the cache key carries sf_dir, a hit returns the same
-    handles, and the two tables disagree on content (different corpora)."""
-    from kitkat_spark.operators.dedup import (
-        _SIG_CACHE,
-        lsh_signatures_and_candidates,
-    )
+    signature table: the two tables disagree on content (different
+    corpora), so a plan-cache collision between paths would show."""
+    from kitkat_spark.operators.dedup import lsh_signatures_and_candidates
 
     release_caches(spark)
-    _SIG_CACHE.clear()
-    sig_a, cand_a = lsh_signatures_and_candidates(spark, "/root/testdata/sf0.001")
-    sig_b, cand_b = lsh_signatures_and_candidates(spark, "/root/testdata/sf0.01")
-    # same key -> same handles (the cache actually caches)
-    sig_a2, cand_a2 = lsh_signatures_and_candidates(
-        spark, "/root/testdata/sf0.001"
-    )
-    assert sig_a is sig_a2 and cand_a is cand_a2
-    assert sig_a is not sig_b
-    # content isolation: per-doc signatures differ between the corpora
+    sig_a, _ = lsh_signatures_and_candidates(spark, "/root/testdata/sf0.001")
+    sig_b, _ = lsh_signatures_and_candidates(spark, "/root/testdata/sf0.01")
     rows_a = {r.doc_id: r.sig for r in sig_a.select("doc_id", "sig").collect()}
     rows_b = {r.doc_id: r.sig for r in sig_b.select("doc_id", "sig").collect()}
     common = set(rows_a) & set(rows_b)
-    assert common, "fixtures share doc_ids; key isolation untestable"
+    assert common, "fixtures share doc_ids; path isolation untestable"
     assert any(rows_a[d] != rows_b[d] for d in common), (
-        "sf0.001 and sf0.01 signature tables are identical — a cache key "
-        "collision would be invisible"
+        "sf0.001 and sf0.01 signature tables are identical — a plan-cache "
+        "collision between paths would be invisible"
     )
     release_caches(spark)
-    _SIG_CACHE.clear()
 
 
-def test_sig_cache_eviction_unpersists(spark):
-    """Evicting another application's entry must UNPERSIST its signature
-    table, not just drop the dict reference (a live multi-session host
-    would otherwise leak the materialized block). Red-green: with the
-    `del`-only eviction this block stays at a real storage level."""
-    from kitkat_spark.operators.dedup import (
-        _SIG_CACHE,
-        lsh_signatures_and_candidates,
-    )
+def test_repeated_lsh_calls_share_one_signature_block(spark):
+    """The traced near-dup pattern — lsh_signatures_and_candidates, then
+    q_near_dedup, repeated on one unchanged path — must hold ONE persisted
+    signature block, not one per call: each call plans an equal signature
+    table, and the CacheManager serves it from the first block."""
+    from kitkat_spark.operators.dedup import lsh_signatures_and_candidates, q_near_dedup
 
+    # drop earlier tests' cache entries too: a released-but-registered plan
+    # recomputes at storage level NONE and would register no block at all
+    spark.catalog.clearCache()
     release_caches(spark)
-    _SIG_CACHE.clear()
-    # stand-in for a live foreign session's entry: a persisted frame keyed
-    # to a different applicationId
-    foreign = spark.range(10).persist()
-    foreign.count()
-    assert foreign.storageLevel.useMemory
-    _SIG_CACHE[("some-other-app", "/root/testdata/sf0.001", False)] = (
-        foreign,
-        foreign,
-    )
-    lsh_signatures_and_candidates(spark, "/root/testdata/sf0.001")
-    assert ("some-other-app", "/root/testdata/sf0.001", False) not in _SIG_CACHE
-    assert not foreign.storageLevel.useMemory, (
-        "evicted entry's signature table is still persisted"
-    )
+    counts = []
+    for _ in range(3):
+        sig, cand = lsh_signatures_and_candidates(spark, SF_DIR)
+        cand.count()
+        q_near_dedup(spark, SF_DIR).collect()
+        counts.append(_n_cached(spark))
+    assert counts == [1, 1, 1], f"persisted blocks per repetition: {counts}"
     release_caches(spark)
-    _SIG_CACHE.clear()
+
+
+def test_rewrite_in_place_returns_the_new_answer(spark, tmp_path):
+    """A corpus rewritten in place (outside Spark) at the same path must get
+    the same answers as a fresh path holding the new files — never the
+    answers persisted from the old files."""
+    from perfbench.gen import write_corpus
+
+    from kitkat_spark.operators.corpus import q_canonical_docs, q_dedup_clusters
+    from kitkat_spark.operators.dedup import q_near_dedup
+
+    def answers(d):
+        return [
+            sorted(tuple(r) for r in q(spark, d).collect())
+            for q in (q_near_dedup, q_dedup_clusters, q_canonical_docs)
+        ]
+
+    path, fresh = str(tmp_path / "corpus"), str(tmp_path / "fresh")
+    write_corpus(path, seed=11, n_docs=300)
+    old = answers(path)
+    write_corpus(path, seed=12, n_docs=300)
+    write_corpus(fresh, seed=12, n_docs=300)
+    new = answers(path)
+    assert new != old, "seeds 11 and 12 give the same answers; test is blind"
+    assert new == answers(fresh)
+    release_caches(spark)

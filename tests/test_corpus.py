@@ -148,26 +148,23 @@ def test_dedup_pipeline_stages_agree(spark):
 
 def test_members_dir_cleanup_removes_created_dirs(tmp_path):
     """Isolated on swapped-in state: calling the real cleanup on the
-    process-shared list would delete the membership dirs other tests'
-    memo still points to (the exact bug this test's first version had)."""
+    process-shared list would delete the scratch dirs (membership tables,
+    partitioned layouts) that other tests' live DataFrames still scan."""
     import os
 
-    from kitkat_spark.operators import corpus
+    from kitkat_spark.sources import writer
 
     d = tmp_path / "fake_members"
     d.mkdir()
     (d / "part-0.parquet").write_bytes(b"x")
-    orig_dirs = corpus._MEMBERS_DIRS_CREATED[:]
-    orig_paths = dict(corpus._MEMBERS_PATHS)
-    corpus._MEMBERS_DIRS_CREATED[:] = [str(d)]
+    orig_dirs = writer._SCRATCH_DIRS[:]
+    writer._SCRATCH_DIRS[:] = [str(d)]
     try:
-        corpus._cleanup_members_dirs()
+        writer._cleanup_scratch_dirs()
         assert not os.path.exists(d)
-        assert corpus._MEMBERS_DIRS_CREATED == []
+        assert writer._SCRATCH_DIRS == []
     finally:
-        corpus._MEMBERS_DIRS_CREATED[:] = orig_dirs
-        corpus._MEMBERS_PATHS.clear()
-        corpus._MEMBERS_PATHS.update(orig_paths)
+        writer._SCRATCH_DIRS[:] = orig_dirs
 
 
 def test_cdc_chunks_shift_resilient(spark):

@@ -33,16 +33,3 @@ def test_entry_smoke(spark):
     assert df.count() >= 0
     assert set(e.oracle_sql()) <= set(e.queries())
 
-
-def test_bench_headline_covers_registry():
-    """Every registry query is benched each round except the documented
-    exclusion (q_cc_chain times the scheduler, not data — see bench.py).
-    A query added to the registry but not to HEADLINE would silently lose
-    its per-round perf record; make that a test failure instead."""
-    import bench
-    from kitkat_spark.queries import QUERIES
-
-    missing = set(QUERIES) - set(bench.HEADLINE)
-    assert missing == {"q_cc_chain"}, f"bench HEADLINE vs registry mismatch: {missing}"
-    unknown = set(bench.HEADLINE) - set(QUERIES)
-    assert not unknown, f"benched but not in registry: {unknown}"
